@@ -38,7 +38,6 @@ from __future__ import annotations
 
 import logging
 import tempfile
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -60,38 +59,6 @@ def _has_checkpoint_dir(spark) -> bool:
 
 
 CHECKPOINT_DIR_ENV = "SERENE_CHECKPOINT_DIR"
-
-CONSTRAINT_PROP_CONF = "spark.sql.constraintPropagation.enabled"
-
-
-@contextmanager
-def constraint_propagation_off(spark):
-    """Scope Catalyst constraint propagation OFF around one eager action.
-
-    ``getAllValidConstraints`` is combinatorial in the product of (wide
-    OR/AND filter trees) x (many-output aliasing nodes like an 18-branch
-    ``stack``): the CSV loader's header-drop filter (OR of per-row 33-column
-    conjunctions) plus its all-empty-row filter (33-way OR) under a stack is
-    exactly that shape — measured 52-57 s of pure driver planning for a
-    2,367-row file, and a driver ``OutOfMemoryError`` when the 33-column
-    wide relation itself is checkpointed (r13). The pass only ADDS inferred,
-    semantically-implied filters (IsNotNull and transitive predicates), so
-    disabling it cannot change results — verified rows-identical on the
-    homeseekers long relation (42,606 rows).
-
-    Use it to wrap an EAGER ``materialize(...)`` of such a plan: the
-    optimization happens inside the scope, the barrier leaves a leaf
-    relation behind, and every downstream plan compiles with the pass back
-    ON (keeping its join-pushdown benefits everywhere else). The previous
-    conf value is restored even on error.
-    """
-    prev = spark.conf.get(CONSTRAINT_PROP_CONF)
-    spark.conf.set(CONSTRAINT_PROP_CONF, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(CONSTRAINT_PROP_CONF, prev)
-
 
 def materialize(df: DataFrame) -> DataFrame:
     """Compute ``df`` now, truncate lineage, return the durable handle.

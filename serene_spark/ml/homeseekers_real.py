@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from serene_spark.registry import register
-from serene_spark.materialize import constraint_propagation_off, materialize
+from serene_spark.materialize import materialize
 
 HOMESEEKERS_CSV = "/root/reference/core/src/test/resources/homeseekers.csv"
 
@@ -67,17 +67,10 @@ def load_homeseekers_long(spark: SparkSession):
     long_df = wide.selectExpr(
         f"stack({len(DEFAULT_LABELS)}, {pairs}) as (column_name, value)"
     )
-    # Materialize the (tiny: 18 x 2,367 rows) long relation. The loader's
-    # header-drop filter is a 33-column conjunction; under the 18-branch
-    # stack, Catalyst's constraint propagation (getAllValidConstraints)
-    # explodes combinatorially on that lineage — observed as a driver OOM
-    # during optimization of any downstream agg. Cutting lineage here makes
-    # every consumer plan against a leaf relation instead. The barrier plan
-    # ITSELF still pays the explosion at this eager action (measured 52-57 s
-    # of driver planning, r13), so the pass is scoped off around it — rows
-    # verified identical, see constraint_propagation_off.
-    with constraint_propagation_off(spark):
-        long_df = long_df.transform(materialize)
+    # Materialize the (tiny: 18 x 2,367 rows) long relation so every
+    # downstream plan reads a leaf relation instead of re-planning the
+    # loader's 33-column filters under the 18-branch stack.
+    long_df = long_df.transform(materialize)
     labels_df = spark.createDataFrame(
         sorted((cols[i], c) for i, c in DEFAULT_LABELS.items()),
         "column_name string, class string",

@@ -39,7 +39,7 @@ from serene_spark.modeler.karma_io import (
 )
 from serene_spark.modeler.suggest import suggest_models
 from serene_spark.registry import register
-from serene_spark.materialize import constraint_propagation_off, materialize
+from serene_spark.materialize import materialize
 
 MUSEUM_ROOT = "/root/reference/modeler/src/test/resources/karma/museum"
 
@@ -242,13 +242,10 @@ def museum_e2e_s01(spark: SparkSession):
     wide = load_csv(spark, S01_CSV)
     cols = [c for c in wide.columns if c in label_by_col]
     pairs = ", ".join(f"'{c}', coalesce(`{c}`, '')" for c in cols)
-    # cut loader-filter lineage, with constraint propagation scoped off for
-    # the barrier plan itself (see homeseekers_real: the pass explodes on
-    # loader-filters-under-stack — 52-57 s of driver planning without this)
-    with constraint_propagation_off(spark):
-        long_df = wide.selectExpr(
-            f"stack({len(cols)}, {pairs}) as (column_name, value)"
-        ).transform(materialize)
+    # cut loader-filter lineage so every consumer plans against a leaf relation
+    long_df = wide.selectExpr(
+        f"stack({len(cols)}, {pairs}) as (column_name, value)"
+    ).transform(materialize)
     labels_df = spark.createDataFrame(
         sorted((c, label_by_col[c]) for c in cols), "column_name string, class string"
     )

@@ -52,10 +52,11 @@ def sample_columns_df(df) -> "DataFrame":
     """Server-ingest preview for an arbitrary DataFrame: first 4n rows,
     deterministic 15-value sample per column (DataSetInterface.scala:39-41,
     214-235; the service layer's GET /dataset/:id sample)."""
-    spark = df.sparkSession
-    view = "__serene_ingest_any"
-    melt(df.limit(HEAD_ROWS)).createOrReplaceTempView(view)
-    return spark.sql(column_sample_sql(view, SPARK))
+    # the melted head is bound as a query argument: Spark registers it under
+    # a fresh view name for this call only, so concurrent requests on the
+    # threaded service never read each other's head
+    return df.sparkSession.sql(
+        column_sample_sql("{head}", SPARK), head=melt(df.limit(HEAD_ROWS)))
 
 
 @register(
@@ -68,5 +69,4 @@ def ingest_column_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("customer",))
     key = COLUMNS["customer"][0]
     head = load_table(spark, sf_dir, "customer").orderBy(key).limit(HEAD_ROWS)
-    melt(head).createOrReplaceTempView("__serene_ingest_head")
-    return spark.sql(column_sample_sql("__serene_ingest_head", SPARK))
+    return spark.sql(column_sample_sql("{head}", SPARK), head=melt(head))

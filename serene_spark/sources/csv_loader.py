@@ -12,14 +12,28 @@ parsing; only the header probe reads a bounded prefix. Multi-line headers are
 merged by dropping rows that exactly match the probed header rows — a
 distributed-safe rephrasing of "skip first N lines" (Spark's CSV source has
 no skipLines; an exact-match data row would be dropped too, documented).
+
+Naming rule: the final column names come from the READ SCHEMA. The header
+is probed first, the names are derived and deduplicated, and the file is
+read with a ``StructType`` of those string columns, so the header-drop and
+empty-row filters reference the final names directly. Never rename a loaded
+frame above its filters (``toDF`` / ``withColumnRenamed`` / aliasing
+``select``): each renaming alias makes Catalyst's constraint propagation
+(``UnaryNode.getAllValidConstraints``) add a rewritten copy of every
+constraint that mentions the column, and the filters mention every column,
+so the constraint set grows as 2^width — seconds of driver planning at 16
+columns, a driver OOM at 20.
 """
 
 from __future__ import annotations
 
+import operator
 import re
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 _NUMERIC_RE = re.compile(r"^[+-]?([0-9]+([.][0-9]*)?|[.][0-9]+)$")
 
@@ -93,11 +107,9 @@ def load_csv(
     type_map: dict[str, str] | None = None,
 ) -> DataFrame:
     """Load CSV(s) at ``path`` (file, dir, or glob) with serene semantics."""
-    raw = spark.read.csv(path, header=False, inferSchema=False, mode="PERMISSIVE")
-    ncols = len(raw.columns)
+    ncols = len(spark.read.csv(path, header=False, inferSchema=False, mode="PERMISSIVE").columns)
 
     header_rows = _probe_header_rows(spark, path, header_lines, ncols) or []
-    names: list[str]
     headerless = False
     if header_rows:
         first = header_rows[0]
@@ -106,23 +118,13 @@ def load_csv(
         if all(_NUMERIC_RE.match(v) for v in first if v != ""):
             headerless = True
     if header_lines == 0 or headerless or not header_rows:
+        header_rows = []
         names = [f"col_{i}" for i in range(ncols)]
-        df = raw
     else:
-        parts: list[list[str]] = header_rows
         names = [
-            _sanitize("_".join(p[i] for p in parts if p[i] != "") or f"col_{i}")
+            _sanitize("_".join(p[i] for p in header_rows if p[i] != "") or f"col_{i}")
             for i in range(ncols)
         ]
-        # drop the header rows themselves (exact-match filter; see module doc)
-        cond = None
-        for p in parts:
-            row_match = None
-            for i, c in enumerate(raw.columns):
-                eq = F.coalesce(F.col(c), F.lit("")) == F.lit(p[i])
-                row_match = eq if row_match is None else (row_match & eq)
-            cond = row_match if cond is None else (cond | row_match)
-        df = raw.filter(~cond)
 
     # dedupe names
     seen: dict[str, int] = {}
@@ -134,14 +136,19 @@ def load_csv(
         else:
             seen[n] = 0
             final.append(n)
-    df = df.toDF(*final)
+    schema = StructType([StructField(n, StringType()) for n in final])
+    df = spark.read.schema(schema).csv(path, header=False, mode="PERMISSIVE")
+    cells = [F.coalesce(F.col(c), F.lit("")) for c in final]
+
+    # drop the header rows themselves (exact-match filter; see module doc)
+    if header_rows:
+        df = df.filter(~reduce(operator.or_, [
+            reduce(operator.and_, [cell == F.lit(p[i]) for i, cell in enumerate(cells)])
+            for p in header_rows
+        ]))
 
     # drop all-empty rows (CsvDataLoader.scala:80-81)
-    any_filled = None
-    for c in final:
-        filled = F.length(F.trim(F.coalesce(F.col(c), F.lit("")))) > 0
-        any_filled = filled if any_filled is None else (any_filled | filled)
-    df = df.filter(any_filled)
+    df = df.filter(reduce(operator.or_, [F.length(F.trim(cell)) > 0 for cell in cells]))
 
     if type_map:
         for col, ltype in type_map.items():

@@ -3,6 +3,8 @@ CsvDataLoaderSpec fixtures (tiny.csv, tiny_emptyrows.csv, no_header.csv)."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 
 from serene_spark.sources.csv_loader import load_csv
@@ -76,6 +78,75 @@ def test_directory_input_headers_from_first_file(spark, tmp_path):
     assert df.columns == ["A", "B"]
     vals = sorted(r["A"] for r in df.collect())
     assert vals == ["1x", "3x"]  # no stray 'A' header rows in the data
+
+
+def _wide_csv(ncols: int, nrows: int = 5) -> str:
+    header = ",".join(f"h{i}" for i in range(ncols))
+    rows = [",".join(f"v{r}_{i}" for i in range(ncols)) for r in range(nrows)]
+    return "\n".join([header, *rows]) + "\n"
+
+
+@pytest.mark.parametrize("ncols", [16, 40])
+def test_wide_load_plans_filter_over_relation(spark, tmpcsv, ncols):
+    """The loader's filters sit directly on the file relation, under their
+    final names. A renaming ``Project`` of N aliases above a filter that
+    references every column makes constraint propagation grow as 2^N."""
+    df = load_csv(spark, tmpcsv(f"wide{ncols}.csv", _wide_csv(ncols)))
+    assert df.columns == [f"h{i}" for i in range(ncols)]
+    plan = df._jdf.queryExecution().optimizedPlan()
+    assert plan.nodeName() == "Filter"
+    assert plan.child().nodeName() == "LogicalRelation"
+    assert " AS " not in plan.toString()
+
+
+def _rows(df) -> Counter:
+    return Counter(tuple(r) for r in df.collect())
+
+
+def _cells(line: str) -> tuple:
+    # Spark's CSV reader reads an empty cell as null
+    return tuple(v or None for v in line.split(","))
+
+
+def test_wide_directory_input_parity(spark, tmp_path):
+    """24-column directory of two files: duplicate header names are
+    deduplicated, blank and comma/space-only rows are dropped, and a data
+    row equal to the header (in the second file) is dropped as a header."""
+    names = ["x", "x", *(f"c{i}" for i in range(2, 24))]
+    header = ",".join(names)
+    blank = ", " * 23 + " "
+
+    def data(tag: str, n: int) -> list[str]:
+        return [",".join("" if (r + i) % 5 == 0 else f"{tag}{r}_{i}" for i in range(24))
+                for r in range(n)]
+
+    a, b = data("a", 4), data("b", 3)
+    d = tmp_path / "wide_dir"
+    d.mkdir()
+    (d / "part-a.csv").write_text("\n".join([header, a[0], "", blank, *a[1:]]) + "\n")
+    (d / "part-b.csv").write_text("\n".join([header, b[0], "", header, blank, *b[1:]]) + "\n")
+
+    df = load_csv(spark, str(d))
+    assert df.columns == ["x", "x_1", *(f"c{i}" for i in range(2, 24))]
+    assert _rows(df) == Counter(_cells(line) for line in a + b)
+
+
+def test_wide_multiline_header_parity(spark, tmpcsv):
+    top = [f"t{i}" for i in range(20)]
+    sub = ["" if i % 3 == 0 else f"s{i}" for i in range(20)]
+    body = [",".join(f"r{r}_{i}" for i in range(20)) for r in range(5)]
+    path = tmpcsv("wide_ml.csv", "\n".join([",".join(top), ",".join(sub), *body]) + "\n")
+
+    df = load_csv(spark, path, header_lines=2)
+    assert df.columns == [t if not s else f"{t}_{s}" for t, s in zip(top, sub)]
+    assert _rows(df) == Counter(_cells(line) for line in body)
+
+
+def test_wide_headerless_numeric_first_row(spark, tmpcsv):
+    body = [",".join("" if i == 7 else str(r * 100 + i) for i in range(20)) for r in range(4)]
+    df = load_csv(spark, tmpcsv("wide_nohead.csv", "\n".join(body) + "\n"))
+    assert df.columns == [f"col_{i}" for i in range(20)]
+    assert _rows(df) == Counter(_cells(line) for line in body)
 
 
 def test_sample_columns_seed_matters(spark, tmpcsv):

@@ -17,11 +17,7 @@ import textwrap
 
 import pytest
 
-from serene_spark.materialize import (
-    CONSTRAINT_PROP_CONF,
-    constraint_propagation_off,
-    materialize,
-)
+from serene_spark.materialize import materialize
 
 
 def test_materialize_local_uses_localcheckpoint(spark):
@@ -33,37 +29,6 @@ def test_materialize_local_uses_localcheckpoint(spark):
         or out.rdd.getCheckpointFile() is None  # localCheckpoint: no file
     assert out.count() == 100
     assert out.schema == df.schema
-
-
-def test_constraint_propagation_off_scopes_and_restores(spark):
-    """The guard flips the conf off only inside the scope, restores the
-    previous value on normal exit AND on error, and a plan materialized
-    inside the scope yields the same rows as one materialized outside
-    (the pass only adds inferred filters — results cannot differ)."""
-    before = spark.conf.get(CONSTRAINT_PROP_CONF)
-    with constraint_propagation_off(spark):
-        assert spark.conf.get(CONSTRAINT_PROP_CONF) == "false"
-    assert spark.conf.get(CONSTRAINT_PROP_CONF) == before
-
-    with pytest.raises(RuntimeError):
-        with constraint_propagation_off(spark):
-            assert spark.conf.get(CONSTRAINT_PROP_CONF) == "false"
-            raise RuntimeError("boom")
-    assert spark.conf.get(CONSTRAINT_PROP_CONF) == before
-
-    # miniature of the hazard shape: wide OR filter under a stack
-    wide = spark.range(50).selectExpr(
-        *[f"cast(id * {i + 1} as string) AS c{i}" for i in range(4)]
-    )
-    filt = wide.filter(
-        "length(c0) > 0 OR length(c1) > 0 OR length(c2) > 0 OR length(c3) > 0"
-    )
-    long = filt.selectExpr("stack(4, 'c0', c0, 'c1', c1, 'c2', c2, 'c3', c3)"
-                           " AS (column_name, value)")
-    with constraint_propagation_off(spark):
-        inside = materialize(long)
-    outside = materialize(long)
-    assert sorted(map(tuple, inside.collect())) == sorted(map(tuple, outside.collect()))
 
 
 def test_materialize_prefers_reliable_checkpoint_when_dir_set(tmp_path):

@@ -44,6 +44,38 @@ def test_dataset_endpoints(server, sf_dir):
     assert code == 200 and ds["id"] in ids
 
 
+def test_concurrent_dataset_samples_stay_per_dataset(server, sf_dir):
+    """Concurrent GETs of different datasets each sample their own data:
+    the melted head of one request must never be read by another."""
+    import concurrent.futures as cf
+    import sys
+
+    ids = {}
+    for table in ("customer", "orders", "supplier"):
+        code, ds = _req(server, "POST", "/v1.0/dataset", {"path": f"{sf_dir}/{table}.parquet"})
+        assert code == 200
+        ids[ds["id"]] = sorted(ds["columns"])
+
+    def sample_keys(eid: int) -> list[list[str]]:
+        out = []
+        for _ in range(4):
+            code, got = _req(server, "GET", f"/v1.0/dataset/{eid}")
+            assert code == 200
+            out.append(sorted(got["sample"]))
+        return out
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with cf.ThreadPoolExecutor(max_workers=6) as ex:
+            futures = [(eid, ex.submit(sample_keys, eid)) for eid in ids for _ in range(2)]
+            results = [(eid, f.result(timeout=300)) for eid, f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    for eid, keys in results:
+        assert keys == [ids[eid]] * 4
+
+
 def test_ssd_owl_crud_and_dependent_delete(server):
     import os
 
